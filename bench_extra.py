@@ -6,7 +6,7 @@ Modes:
       (set PLANS_WHEN=before|after; default after)
   python bench_extra.py build CPUS NPTS      certified pack-build wall
   python bench_extra.py tin_shuffle          large-TIN shuffle path
-      (propagate_at broadcast_triangles=False) timing + Exchange count
+      (build_triangles + propagate_at equi-join) timing + Exchange count
       (VERDICT r5 #4)
   python bench_extra.py mor_pos              positional-delete MoR apply
       at scale (VERDICT r5 #5)
@@ -110,8 +110,7 @@ def run_tin_shuffle() -> None:
     best = float("inf")
     plan = ""
     for _ in range(2):
-        out = propagate_at(geo, tris, index_res=9, centroid=cen,
-                           broadcast_triangles=False)
+        out = propagate_at(geo, tris, index_res=9, centroid=cen)
         agg = out.agg(F.count("*").alias("n"), F.avg("var_zp"))
         plan = agg._sc._jvm.PythonSQLUtils.explainString(
             agg._jdf.queryExecution(), "formatted")

@@ -39,7 +39,7 @@ TIN_SCHEMA = (
 
 TPU_COLS = ["var_x", "var_y", "var_z", "cov_xy", "cov_xz", "cov_yz"]
 
-# Fixed task count for the applyInPandas kernel stages. Fixed (not
+# Fixed task count for build_triangles' gather stage. Fixed (not
 # cores-derived) so task granularity is identical at every measured
 # parallelism level, and small: each Python task costs ~20 ms of
 # serialized runner handshake regardless of size (measured: 128 no-op
@@ -254,18 +254,21 @@ from gpiv_spark.functions.geocode import EXTENT as _EXT, X0 as _X0, Y0 as _Y0  #
 
 
 # ---------------------------------------------------------------------------
-# Scale path: triangle table + JVM-side containment/propagation join.
+# Scale path: ONE certified triangulation, consumed two ways.
 #
-# The cogrouped kernel above is the exact per-cell reference semantics;
-# for doc-scale throughput (10^12 docs) the winning plan is:
-#   1. build the TIN ONCE as a DataFrame of triangles (per coarse cell,
-#      halo'd Delaunay, each triangle owned by the cell containing its
-#      centroid -> no duplicates), exploded to the fine Z-order cells
-#      its bbox covers (Raptor-style equi+refine index);
-#   2. stream documents through an equi-join on the fine cell plus a
-#      barycentric-sign refine and the P2/P3/P5/E3 closed forms — all
-#      Catalyst column arithmetic, zero Python per doc.
-# Python cost is O(points); per-doc cost is wholly JVM codegen.
+# The cogrouped kernel above is the exact per-cell reference semantics.
+# For doc-scale throughput the TIN is built ONCE by the certified blob
+# build (one per-cell kernel does Delaunay + the halo-sufficiency
+# certificate + its pack shard; certify_pack_blobs repairs failed
+# cells; merge_pack_blobs + PackFileHandle make the pack). Documents
+# then either
+#   1. probe the mmap'd pack in mapInPandas (probe_docs: no shuffle), or
+#   2. equi-join the pack's triangles on the fine Z-order cell with a
+#      barycentric-sign refine and the P2/P3/P5/E3 closed forms as
+#      Catalyst column arithmetic (build_triangles + propagate_at,
+#      Raptor-style equi+refine) — zero Python per doc.
+# Both pick the lowest pack row among containing triangles, so they
+# return identical rows.
 # ---------------------------------------------------------------------------
 
 TRI_SCHEMA = (
@@ -280,126 +283,37 @@ TRI_SCHEMA = (
 
 
 def build_triangles(spark: SparkSession, points: DataFrame, cell_res: int = 4,
-                    halo_m: float | None = None) -> DataFrame:
-    """Distributed Delaunay -> triangle table (one row per owned triangle).
+                    halo_m: float | None = None,
+                    id_col: str = "pid") -> DataFrame:
+    """Certified triangle table: one TRI_SCHEMA row per triangle of the
+    certified pack (build_broadcast_pack), tri_id = its pack row.
 
-    Ownership = the coarse cell containing the triangle centroid, so the
-    union over cells is duplicate-free. Index to fine cells afterwards
-    via index_triangles (Spark, shuffle path) or pack_triangle_index
-    (driver-side NumPy, broadcast path).
+    A fixed-task range gathers each triangle's vertices and TPU from
+    the worker-mapped pack, so propagate_at's min(tri_id) tie-break is
+    the probe's lowest-row pick. The returned DataFrame reads the pack
+    on every evaluation: its directory lives until the Spark driver
+    process exits.
     """
-    n = 1 << cell_res
-    pts = fan_out_points(spark, points, cell_res, halo_m)
+    handle = build_broadcast_pack(spark, points, cell_res, halo_m=halo_m,
+                                  id_col=id_col)
+    n_tri = len(handle.value["tv"])
 
-    csize = _EXT / n
+    def _gather(batches):
+        idx = handle.value
+        for pdf in batches:
+            row = pdf["id"].to_numpy(np.int64)
+            tv = idx["tv"][row]
+            data = {"tri_id": row}
+            for k in range(3):
+                for c in ("x", "y", "z"):
+                    data[f"{c}{k + 1}"] = idx[f"p{c}"][tv[:, k]]
+            for k in range(3):
+                for t in TPU_COLS:
+                    data[f"{t}_{k + 1}"] = idx[f"p_{t}"][tv[:, k]]
+            yield pd.DataFrame(data)
 
-    def _cell_tris(key, pdf):
-        import numpy as _np
-
-        cell = int(key[0])
-        cy, cx = divmod(cell, n)
-        x_lo, x_hi = _X0 + cx * csize, _X0 + (cx + 1) * csize
-        y_lo, y_hi = _Y0 + cy * csize, _Y0 + (cy + 1) * csize
-        # deterministic duplicate-XY keeper (see _cell_kernel)
-        pdf = pdf.sort_values(
-            list(pdf.columns), kind="mergesort"
-        ).drop_duplicates(subset=["x", "y"])
-        p = pdf[["x", "y", "z"]].to_numpy(dtype=_np.float64)
-        tpu = pdf[TPU_COLS].to_numpy(dtype=_np.float64)
-        cols = (["tri_id"]
-                + [f"{c}{k}" for k in (1, 2, 3) for c in ("x", "y", "z")]
-                + [f"{t}_{k}" for k in (1, 2, 3) for t in TPU_COLS])
-        if len(p) < 3:
-            return pd.DataFrame(columns=cols)
-        tri = dl.delaunay(p[:, :2])
-        if len(tri) == 0:
-            return pd.DataFrame(columns=cols)
-        cen_x = p[tri, 0].mean(axis=1)
-        cen_y = p[tri, 1].mean(axis=1)
-        own = (cen_x >= x_lo) & (cen_x < x_hi) & (cen_y >= y_lo) & (cen_y < y_hi)
-        tri = tri[own]
-        if len(tri) == 0:
-            return pd.DataFrame(columns=cols)
-        vx = p[tri, 0]
-        vy = p[tri, 1]
-        vz = p[tri, 2]
-        # cell-scoped unique id (cells own disjoint triangle sets)
-        data = {"tri_id": cell * (1 << 24) + _np.arange(len(tri), dtype=_np.int64)}
-        for k in range(3):
-            data[f"x{k + 1}"] = vx[:, k]
-            data[f"y{k + 1}"] = vy[:, k]
-            data[f"z{k + 1}"] = vz[:, k]
-            tp = tpu[tri[:, k]]
-            for ti, t in enumerate(TPU_COLS):
-                data[f"{t}_{k + 1}"] = tp[:, ti]
-        base = pd.DataFrame(data)
-        return base
-
-    # Pin the kernel stage's parallelism: an explicit hash repartition on
-    # the group key satisfies applyInPandas' distribution requirement, so
-    # no further exchange is inserted and AQE cannot byte-coalesce the
-    # CPU-bound Delaunay tasks down to a handful.
-    npart = KERNEL_TASKS
-    return (
-        pts.repartition(npart, "cell")
-        .groupBy("cell")
-        .applyInPandas(_cell_tris, TRI_SCHEMA)
-    )
-
-
-TRI_ID_SCHEMA = "tri_id long, v1 long, v2 long, v3 long"
-
-
-def build_triangle_ids(spark: SparkSession, points: DataFrame,
-                       cell_res: int = 4, halo_m: float | None = None,
-                       id_col: str = "point_id") -> DataFrame:
-    """Normalized variant of build_triangles: (tri_id, v1, v2, v3) rows
-    referencing global point ids — the payload the broadcast pack wants
-    (3 ints/triangle instead of 27 doubles; the vertex gather happens
-    worker-side against the much smaller points table)."""
-    n = 1 << cell_res
-    pts = fan_out_points(spark, points, cell_res, halo_m, extra_cols=(id_col,))
-    csize = _EXT / n
-
-    def _cell_tri_ids(key, pdf):
-        import numpy as _np
-
-        cell = int(key[0])
-        cy, cx = divmod(cell, n)
-        x_lo, x_hi = _X0 + cx * csize, _X0 + (cx + 1) * csize
-        y_lo, y_hi = _Y0 + cy * csize, _Y0 + (cy + 1) * csize
-        # deterministic keeper: min id wins for coincident XY
-        pdf = pdf.sort_values(id_col, kind="mergesort").drop_duplicates(
-            subset=["x", "y"])
-        p = pdf[["x", "y"]].to_numpy(dtype=_np.float64)
-        pid = pdf[id_col].to_numpy(dtype=_np.int64)
-        if len(p) < 3:
-            return pd.DataFrame(columns=["tri_id", "v1", "v2", "v3"])
-        tri = dl.delaunay(p)
-        if len(tri) == 0:
-            return pd.DataFrame(columns=["tri_id", "v1", "v2", "v3"])
-        cen_x = p[tri, 0].mean(axis=1)
-        cen_y = p[tri, 1].mean(axis=1)
-        own = ((cen_x >= x_lo) & (cen_x < x_hi)
-               & (cen_y >= y_lo) & (cen_y < y_hi))
-        tri = tri[own]
-        if len(tri) == 0:
-            return pd.DataFrame(columns=["tri_id", "v1", "v2", "v3"])
-        return pd.DataFrame(
-            {
-                "tri_id": cell * (1 << 24) + _np.arange(len(tri), dtype=_np.int64),
-                "v1": pid[tri[:, 0]],
-                "v2": pid[tri[:, 1]],
-                "v3": pid[tri[:, 2]],
-            }
-        )
-
-    npart = KERNEL_TASKS
-    return (
-        pts.repartition(npart, "cell")
-        .groupBy("cell")
-        .applyInPandas(_cell_tri_ids, TRI_ID_SCHEMA)
-    )
+    return (spark.range(0, n_tri, 1, KERNEL_TASKS)
+            .mapInPandas(_gather, TRI_SCHEMA))
 
 
 PACK_BLOB_SCHEMA = ("cell long, n_pts long, n_tri long, n_pairs long, "
@@ -409,11 +323,13 @@ PACK_BLOB_SCHEMA = ("cell long, n_pts long, n_tri long, n_pairs long, "
 
 def _make_cell_blob_kernel(n: int, csize: float, nf: int, fs: float,
                            halo_eff: float, edge_eff: float, id_col: str):
-    """Factory for the per-cell pack kernel (shared by the ring-1 pass
-    of build_pack_blobs and the wide-reach certify retries of
-    build_pack_blobs_at_cells). ``halo_eff``/``edge_eff`` are the halo
-    the CERTIFICATE may claim — callers must guarantee the fan-in
-    actually delivered every point within that distance of the cell."""
+    """Factory for THE per-cell TIN kernel: local Delaunay, the
+    halo-sufficiency certificate and the cell's pack shard (shared by
+    the ring-1 pass of build_pack_blobs and the wide-reach certify
+    retries of build_pack_blobs_at_cells). ``halo_eff``/``edge_eff``
+    are the halo the CERTIFICATE may claim — callers must guarantee the
+    fan-in actually delivered every point within that distance of the
+    cell."""
     import pickle
 
     def _cell_blob(key, pdf):
@@ -677,10 +593,12 @@ def build_pack_blobs_at_cells(spark: SparkSession, points: DataFrame,
 
 
 def merge_pack_blobs(blob_rows, index_res: int) -> dict:
-    """Concatenate per-cell shards into the broadcast pack dict (same
-    layout as pack_triangle_index_normalized's output). Driver cost:
-    memcpy-level concatenation, one argsort over points, one over
-    triangles, one lexsort over covering pairs."""
+    """Concatenate per-cell shards into the pack dict: points (pid
+    order) with z/TPU, triangles as int32 vertex rows ``tv`` plus dense
+    x/y per vertex for the containment test, and the CSR fine-cell
+    index (``offsets``, ``cell_tri``). Driver cost: memcpy-level
+    concatenation, one radix argsort over points, one over covering
+    pairs."""
     import pickle
 
     nf = 1 << index_res
@@ -707,7 +625,7 @@ def merge_pack_blobs(blob_rows, index_res: int) -> dict:
     def cat(name, dtype):
         return np.concatenate([s[name] for s in shards]).astype(dtype, copy=False)
 
-    pack = {"nf": nf, "normalized": True}
+    pack = {"nf": nf}
 
     # The covering-pair pipeline (concat + radix argsort + gather +
     # bincount, ~2/3 of the merge's memory traffic) shares no data
@@ -784,9 +702,9 @@ def merge_pack_blobs(blob_rows, index_res: int) -> dict:
     return pack
 
 
-# Per-process cache of opened pack views (worker processes are reused
-# across tasks; the mmap views live as long as the handle's directory
-# key stays cached).
+# Per-process cache of opened pack views, handle dir -> (local dir,
+# views). Worker processes are reused across tasks; the mmap views live
+# as long as the entry stays cached.
 _PACK_CACHE: dict = {}
 
 
@@ -835,18 +753,24 @@ class PackFileHandle:
     def value(self) -> dict:
         import os
 
-        d = _PACK_CACHE.get(self._dir)
-        if d is None:
-            base = self._dir
-            if not os.path.isdir(base):  # executor without shared fs
-                from pyspark import SparkFiles
+        hit = _PACK_CACHE.get(self._dir)
+        if hit is not None:
+            return hit[1]
+        # drop views of destroyed packs first: destroy() runs in the Spark
+        # driver only, and a reused worker would otherwise pin every
+        # deleted pack's mmaps for the rest of its life
+        for k in [k for k, (b, _) in _PACK_CACHE.items()
+                  if not os.path.isdir(b)]:
+            del _PACK_CACHE[k]
+        base = self._dir
+        if not os.path.isdir(base):  # executor without shared fs
+            from pyspark import SparkFiles
 
-                base = SparkFiles.get(os.path.basename(self._dir))
-            d = dict(self._meta)
-            for k in self._arrays:
-                d[k] = np.load(os.path.join(base, f"{k}.npy"),
-                               mmap_mode="r")
-            _PACK_CACHE[self._dir] = d
+            base = SparkFiles.get(os.path.basename(self._dir))
+        d = dict(self._meta)
+        for k in self._arrays:
+            d[k] = np.load(os.path.join(base, f"{k}.npy"), mmap_mode="r")
+        _PACK_CACHE[self._dir] = (base, d)
         return d
 
     def destroy(self, blocking: bool = False) -> None:
@@ -859,32 +783,27 @@ class PackFileHandle:
         _PACK_CACHE.pop(self._dir, None)
 
 
-def build_broadcast_pack(spark: SparkSession, points: DataFrame,
-                         cell_res: int = 4, index_res: int = 9,
-                         halo_m: float | None = None,
-                         id_col: str = "point_id", certify: bool = False):
-    """points -> distributed Delaunay+pack -> merged pack -> Broadcast.
+def certify_pack_blobs(spark: SparkSession, points: DataFrame,
+                       cell_res: int = 4, index_res: int = 9,
+                       halo_m: float | None = None,
+                       id_col: str = "point_id") -> dict[int, bytes]:
+    """The certify ladder: {cell: blob payload} for every populated cell,
+    every owned triangle carrying the halo-sufficiency certificate.
 
-    ``certify=True`` enforces the per-triangle halo-sufficiency
-    certificate and REPAIRS failures: cells with uncertified owned
-    triangles (in practice a handful of hull-edge cells whose sliver
-    circumcircles run along the data boundary) are rebuilt with a
-    doubled halo — only their fan-in rows reshuffle — until every
-    owned triangle certifies. This is what makes a density-adaptive
-    halo safe: the fixed-metre default is wasteful on dense clouds and
-    silently insufficient on sparse ones. The certificate guarantees
-    every EMITTED triangle is globally Delaunay (soundness);
-    completeness of the thin band between the local and global convex
-    hulls is not claimed (F4 hull-membership probes there return NULL
-    either way).
+    Cells with uncertified owned triangles (in practice a handful of
+    hull-edge cells whose sliver circumcircles run along the data
+    boundary) are rebuilt with wider halos — only their fan-in rows
+    reshuffle — until every owned triangle certifies. This is what
+    makes a density-adaptive halo safe: the fixed-metre default is
+    wasteful on dense clouds and silently insufficient on sparse ones.
+    The certificate guarantees every EMITTED triangle is globally
+    Delaunay (soundness); completeness of the thin band between the
+    local and global convex hulls is not claimed (F4 hull-membership
+    probes there return NULL either way). Raises ValueError when a
+    point lies outside the nominal extent (the certificate's bbox
+    clamp would be unsound).
     """
     csize = _EXT / (1 << cell_res)
-    if not certify:
-        blobs = build_pack_blobs(spark, points, cell_res, index_res,
-                                 halo_m, id_col)
-        pack = merge_pack_blobs(blobs.toArrow(), index_res)
-        return PackFileHandle(spark, pack)
-
     # extent-boundary cells get 4x the halo up front: hull slivers
     # along the data edge are where the certificate fails in practice,
     # and paying their wider fan-in immediately beats a whole extra
@@ -937,10 +856,13 @@ def build_broadcast_pack(spark: SparkSession, points: DataFrame,
             failed = [c for c, u in zip(retry.column("cell").to_pylist(),
                                         retry.column("n_uncert").to_pylist())
                       if u]
+            # the wide-reach step below starts from the need the LAST
+            # retry reported, not the first pass's stale one
+            halo_need = max(retry.column("halo_need").to_pylist(),
+                            default=0.0)
         if failed and cell_res > 0 and len(failed) > few:
-            return build_broadcast_pack(spark, points, cell_res - 1,
-                                        index_res, halo_m, id_col,
-                                        certify=True)
+            return certify_pack_blobs(spark, points, cell_res - 1,
+                                      index_res, halo_m, id_col)
     max_halo = (1 << cell_res) * csize
     while failed:
         # one wide-reach rebuild of just the stubborn cells, at the
@@ -966,84 +888,35 @@ def build_broadcast_pack(spark: SparkSession, points: DataFrame,
                 f"halo certificate still failing for cells {failed[:8]} "
                 f"at a whole-extent halo ({halo_r:.1f} m) — unreachable "
                 "unless the certificate itself is broken")
-    pack = merge_pack_blobs(
-        [{"payload": b} for b in payload_by_cell.values()], index_res)
+    return payload_by_cell
+
+
+def build_broadcast_pack(spark: SparkSession, points: DataFrame,
+                         cell_res: int = 4, index_res: int = 9,
+                         halo_m: float | None = None,
+                         id_col: str = "point_id", certify: bool = True):
+    """points -> certified per-cell shards (certify_pack_blobs) ->
+    merged pack (merge_pack_blobs) -> PackFileHandle.
+
+    Every pack is certified; ``certify`` stays only so that callers
+    passing ``certify=True`` keep working, and any other value raises.
+    """
+    if certify is not True:
+        raise ValueError("build_broadcast_pack: every pack is certified "
+                         f"(certify={certify!r} is not supported)")
+    blobs = certify_pack_blobs(spark, points, cell_res, index_res, halo_m,
+                               id_col)
+    pack = merge_pack_blobs([{"payload": b} for b in blobs.values()],
+                            index_res)
     return PackFileHandle(spark, pack)
-
-
-def pack_triangle_index_normalized(tri_tbl, pts_tbl, index_res: int,
-                                   id_col: str = "point_id") -> dict:
-    """Broadcast pack from (tri_id, v1..v3) + the points table.
-
-    ~3x smaller than the denormalized pack: the driver ships point
-    coordinates/TPU once plus int32 vertex indices, and the probe
-    gathers per batch (two fancy-index hops, vectorized)."""
-
-    def _np_cols(tbl, names, dtypes):
-        if isinstance(tbl, pd.DataFrame):
-            return {c: tbl[c].to_numpy(t) for c, t in zip(names, dtypes)}
-        return {
-            c: tbl.column(c).to_numpy(zero_copy_only=False).astype(t)
-            for c, t in zip(names, dtypes)
-        }
-
-    nf = 1 << index_res
-    fs = _EXT / nf
-    pcols = _np_cols(
-        pts_tbl, [id_col, "x", "y", "z"] + TPU_COLS,
-        [np.int64] + [np.float64] * 9,
-    )
-    order = np.argsort(pcols[id_col], kind="stable")
-    pid_sorted = pcols[id_col][order]
-    pack = {"nf": nf, "normalized": True}
-    pack["px"] = pcols["x"][order]
-    pack["py"] = pcols["y"][order]
-    pack["pz"] = pcols["z"][order]
-    for t in TPU_COLS:
-        pack[f"p_{t}"] = pcols[t][order]
-
-    tcols = _np_cols(tri_tbl, ["tri_id", "v1", "v2", "v3"], [np.int64] * 4)
-    torder = np.argsort(tcols["tri_id"], kind="stable")
-    tv = np.empty((len(torder), 3), dtype=np.int32)
-    for k, c in enumerate(("v1", "v2", "v3")):
-        tv[:, k] = np.searchsorted(pid_sorted, tcols[c][torder]).astype(np.int32)
-    pack["tv"] = tv
-
-    vx = pack["px"][tv]
-    vy = pack["py"][tv]
-    # dense containment arrays (the hot per-candidate phase reads these;
-    # z/TPU stay normalized behind tv — hybrid keeps the pack ~2x smaller
-    # than fully dense at fully-dense probe speed)
-    for k in range(3):
-        pack[f"x{k + 1}"] = np.ascontiguousarray(vx[:, k])
-        pack[f"y{k + 1}"] = np.ascontiguousarray(vy[:, k])
-    ix_lo = np.clip(((vx.min(1) - _X0) / fs).astype(np.int64), 0, nf - 1)
-    ix_hi = np.clip(((vx.max(1) - _X0) / fs).astype(np.int64), 0, nf - 1)
-    iy_lo = np.clip(((vy.min(1) - _Y0) / fs).astype(np.int64), 0, nf - 1)
-    iy_hi = np.clip(((vy.max(1) - _Y0) / fs).astype(np.int64), 0, nf - 1)
-    nx = ix_hi - ix_lo + 1
-    ny = iy_hi - iy_lo + 1
-    reps = nx * ny
-    total = int(reps.sum())
-    rows = np.repeat(np.arange(len(tv), dtype=np.int32), reps)
-    base = np.concatenate([[0], np.cumsum(reps)[:-1]])
-    within = np.arange(total) - np.repeat(base, reps)
-    wx = within % np.repeat(nx, reps)
-    wy = within // np.repeat(nx, reps)
-    icell = (np.repeat(iy_lo, reps) + wy) * nf + (np.repeat(ix_lo, reps) + wx)
-    order2 = np.argsort(icell, kind="stable")
-    counts = np.bincount(icell, minlength=nf * nf)
-    pack["offsets"] = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
-    pack["cell_tri"] = rows[order2]
-    return pack
 
 
 def index_triangles(triangles: DataFrame, index_res: int) -> DataFrame:
     """Explode each triangle to the fine Z-order cells its bbox covers.
 
     Pure JVM (explode(sequence(...)) twice) — the Raptor-style equi-join
-    index for the shuffle path. The broadcast path computes the same
-    mapping driver-side in pack_triangle_index instead.
+    index for the shuffle path. The pack carries the same mapping as
+    its CSR index (cell_tri), built per cell by the blob kernel.
     """
     nf = 1 << index_res
     fs = _EXT / nf
@@ -1071,7 +944,7 @@ def index_triangles(triangles: DataFrame, index_res: int) -> DataFrame:
 
 def propagate_at(docs_geo: DataFrame, triangles: DataFrame, index_res: int = 7,
                  centroid: tuple[float, float, float] = (0.0, 0.0, 0.0),
-                 broadcast_triangles: bool = True) -> DataFrame:
+                 ) -> DataFrame:
     """Per-doc TIN interpolation + E3 variance — pure Catalyst exprs.
 
     docs_geo needs (doc_id, x, y). Returns doc_id, zp, var_zp (docs whose
@@ -1101,8 +974,7 @@ def propagate_at(docs_geo: DataFrame, triangles: DataFrame, index_res: int = 7,
         triangles.select("tri_id", "x1", "y1", "x2", "y2", "x3", "y3"),
         index_res,
     )
-    t = F.broadcast(narrow) if broadcast_triangles else narrow
-    j = d.join(t, "icell")
+    j = d.join(narrow, "icell")
 
     # barycentric containment (boundary-inclusive, CCW triangles) —
     # the ONE edge-sign template (pip.edge_sign), not a byte-for-byte
@@ -1127,8 +999,7 @@ def propagate_at(docs_geo: DataFrame, triangles: DataFrame, index_res: int = 7,
         )
     )
 
-    full = F.broadcast(triangles) if broadcast_triangles else triangles
-    j = hits.join(full, "tri_id")
+    j = hits.join(triangles, "tri_id")
 
     cx, cy, cz = centroid
     v = {}
@@ -1154,70 +1025,6 @@ def propagate_at(docs_geo: DataFrame, triangles: DataFrame, index_res: int = 7,
     )
 
 
-# ---------------------------------------------------------------------------
-# Broadcast-index path (the BASELINE.json architecture: "broadcast R-tree +
-# prepared-geometry point-in-polygon"): the triangle table is collected
-# once, packed into flat NumPy arrays with a CSR-style cell index, and
-# broadcast; documents stream through mapInPandas with NO shuffle — each
-# Arrow batch probes the worker-local index, runs the barycentric refine
-# and the vectorized E3 quadratic form, and emits (doc_id, zp, var_zp).
-# One Python call per ~64k-doc batch; per-doc cost is pure NumPy.
-# ---------------------------------------------------------------------------
-
-
-
-def pack_triangle_index(full_tbl, index_res: int) -> dict:
-    """CSR cell index (int32 indirection) + unique-triangle payload.
-
-    ``full_tbl``: one row per triangle (tri_id + 9 vertex + 18 tpu cols),
-    as a pandas DataFrame OR a pyarrow Table (from DataFrame.toArrow(),
-    which skips the pandas conversion on the driver). The fine-cell
-    covering (bbox) is computed HERE, vectorized on the driver — the
-    executors never ship exploded index rows.
-    """
-    nf = 1 << index_res
-    fs = _EXT / nf
-    if not isinstance(full_tbl, pd.DataFrame):
-        cols = {
-            name: full_tbl.column(name).to_numpy(zero_copy_only=False)
-            for name in full_tbl.column_names
-        }
-        t = pd.DataFrame(cols)
-    else:
-        t = full_tbl
-    order = np.argsort(t["tri_id"].to_numpy(np.int64), kind="stable")
-    t = t.iloc[order].reset_index(drop=True)
-    vx = t[["x1", "x2", "x3"]].to_numpy(np.float64)
-    vy = t[["y1", "y2", "y3"]].to_numpy(np.float64)
-    ix_lo = np.clip(((vx.min(1) - _X0) / fs).astype(np.int64), 0, nf - 1)
-    ix_hi = np.clip(((vx.max(1) - _X0) / fs).astype(np.int64), 0, nf - 1)
-    iy_lo = np.clip(((vy.min(1) - _Y0) / fs).astype(np.int64), 0, nf - 1)
-    iy_hi = np.clip(((vy.max(1) - _Y0) / fs).astype(np.int64), 0, nf - 1)
-    nx = ix_hi - ix_lo + 1
-    ny = iy_hi - iy_lo + 1
-    reps = nx * ny
-    total = int(reps.sum())
-    rows = np.repeat(np.arange(len(t), dtype=np.int32), reps)
-    # per-pair offset within its triangle's bbox window (vectorized)
-    base = np.concatenate([[0], np.cumsum(reps)[:-1]])
-    within = np.arange(total) - np.repeat(base, reps)
-    wx = within % np.repeat(nx, reps)
-    wy = within // np.repeat(nx, reps)
-    icell = (np.repeat(iy_lo, reps) + wy) * nf + (np.repeat(ix_lo, reps) + wx)
-    order = np.argsort(icell, kind="stable")
-    icell = icell[order]
-    rows = rows[order]
-    counts = np.bincount(icell, minlength=nf * nf)
-    offsets = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
-    pack = {"offsets": offsets, "cell_tri": rows, "nf": nf}
-    for c in ("x1", "y1", "z1", "x2", "y2", "z2", "x3", "y3", "z3"):
-        pack[c] = t[c].to_numpy(np.float64)
-    for k in (1, 2, 3):
-        for tc in TPU_COLS:
-            pack[f"{tc}_{k}"] = t[f"{tc}_{k}"].to_numpy(np.float64)
-    return pack
-
-
 # Cache-blocking for the probe kernel: at Arrow's 65536-row batches
 # every intermediate array (~3.4 candidates/point x 8 B x dozens of
 # temporaries in the geometry/Jacobian chain) is ~1.8 MB — past L2, so
@@ -1234,12 +1041,9 @@ _PROBE_ARGTYPES = None
 
 
 def _probe_c(idx: dict, x: np.ndarray, y: np.ndarray, centroid: tuple):
-    """C probe for normalized packs (functions/_probe_core.c): exact
-    expression-order port — bit-identical to _probe_batch_core, pinned
-    by tests/test_probe_c.py. Returns None when the core is
-    unavailable or the pack is not the normalized layout."""
-    if not idx.get("normalized"):
-        return None
+    """C probe (functions/_probe_core.c): exact expression-order port —
+    bit-identical to _probe_batch_core, pinned by tests/test_probe_c.py.
+    Returns None when the core is unavailable."""
     import ctypes
     from pathlib import Path
 
@@ -1352,21 +1156,11 @@ def _probe_batch_core(idx: dict, x: np.ndarray, y: np.ndarray,
     # one (m,3) vertex-id gather, shared with the E3 loop below (it was
     # re-gathered 3x per chunk — wasted DRAM traffic in the kernel the
     # PROBE_CHUNK cache blocking exists to keep bandwidth-lean)
-    tvs = idx["tv"][s] if idx.get("normalized") else None
-    if idx.get("normalized"):
-        for k in (1, 2, 3):
-            vk = tvs[:, k - 1]
-            v[f"x{k}"] = idx[f"x{k}"][s] - cx
-            v[f"y{k}"] = idx[f"y{k}"][s] - cy
-            v[f"z{k}"] = idx["pz"][vk] - cz
-    else:
-        for k, (xc, yc, zc) in enumerate(
-            (("x1", "y1", "z1"), ("x2", "y2", "z2"), ("x3", "y3", "z3")),
-            start=1,
-        ):
-            v[f"x{k}"] = idx[xc][s] - cx
-            v[f"y{k}"] = idx[yc][s] - cy
-            v[f"z{k}"] = idx[zc][s] - cz
+    tvs = idx["tv"][s]
+    for k in (1, 2, 3):
+        v[f"x{k}"] = idx[f"x{k}"][s] - cx
+        v[f"y{k}"] = idx[f"y{k}"][s] - cy
+        v[f"z{k}"] = idx["pz"][tvs[:, k - 1]] - cz
     xp = x[found] - cx
     yp = y[found] - cy
     x1, y1, z1 = v["x1"], v["y1"], v["z1"]
@@ -1395,11 +1189,7 @@ def _probe_batch_core(idx: dict, x: np.ndarray, y: np.ndarray,
     acc = np.zeros(found.sum())
     for k in range(3):
         dx, dy, dz = dmat[3 * k], dmat[3 * k + 1], dmat[3 * k + 2]
-        if idx.get("normalized"):
-            vk = tvs[:, k]
-            tp = {t: idx[f"p_{t}"][vk] for t in TPU_COLS}
-        else:
-            tp = {t: idx[f"{t}_{k + 1}"][s] for t in TPU_COLS}
+        tp = {t: idx[f"p_{t}"][tvs[:, k]] for t in TPU_COLS}
         acc += (dx * dx * tp["var_x"]
                 + dy * dy * tp["var_y"]
                 + dz * dz * tp["var_z"]
@@ -1410,23 +1200,10 @@ def _probe_batch_core(idx: dict, x: np.ndarray, y: np.ndarray,
     return zp, var, found
 
 
-def propagate_at_broadcast(spark: SparkSession, docs_geo: DataFrame,
-                           triangles: DataFrame, index_res: int = 7,
-                           centroid: tuple[float, float, float] = (0.0, 0.0, 0.0),
-                           ) -> DataFrame:
-    """Shuffle-free doc-side propagation via a broadcast triangle index.
-
-    Semantics match propagate_at (docs outside every triangle dropped).
-    """
-    pack = pack_triangle_index(triangles.toArrow(), index_res)
-    bc = spark.sparkContext.broadcast(pack)
-    return probe_docs(docs_geo, bc, centroid)
-
-
 def probe_docs(docs_geo: DataFrame, bc,
                centroid: tuple[float, float, float]) -> DataFrame:
-    """mapInPandas containment+E3 probe of (doc_id, x, y) rows against a
-    broadcast pack (from merge_pack_blobs or pack_triangle_index*)."""
+    """mapInPandas containment+E3 probe of (doc_id, x, y) rows against
+    a pack handle (build_broadcast_pack's PackFileHandle)."""
     cen = tuple(centroid)
 
     def probe(batches):
@@ -1447,7 +1224,7 @@ def probe_docs(docs_geo: DataFrame, bc,
     return docs_geo.mapInPandas(probe, "doc_id long, zp double, var_zp double")
 
 
-# rough bytes/point of the merged normalized pack: 10 point doubles +
+# rough bytes/point of the merged pack: 10 point doubles +
 # ~2 triangles/point x (12B tv + 32B dense xy) + ~3.4 covering pairs/tri
 # x 4B cell_tri + offsets; measured 90 MB at 400k points => ~225 B/pt.
 PACK_BYTES_PER_POINT = 240
@@ -1459,12 +1236,15 @@ def propagate_auto(spark: SparkSession, docs_geo: DataFrame,
                    centroid: tuple[float, float, float] = (0.0, 0.0, 0.0),
                    broadcast_budget_bytes: int = 1 << 30,
                    ) -> tuple[DataFrame, str]:
-    """Size-based physical-plan switch (VERDICT r1 'What's wrong' #1).
+    """Size-based probe-plan switch over ONE certified pack (VERDICT r1
+    'What's wrong' #1).
 
-    Small TIN (est. pack <= budget): distributed blob pack -> broadcast
-    -> shuffle-free mapInPandas probe. Large TIN: triangle table stays
-    distributed and docs equi-join it on the fine cell (propagate_at,
-    shuffle path) — no single node ever holds the whole TIN.
+    Both branches build the same certified pack, merged on the Spark
+    driver. Small TIN (est. pack <= budget): workers mmap the pack and
+    probe docs in mapInPandas, no shuffle. Large TIN: the pack's triangles
+    become a distributed table (build_triangles) that docs equi-join
+    on the fine cell (propagate_at). Both return the same rows, bit
+    for bit.
 
     Returns (result_df, 'broadcast'|'shuffle').
     """
@@ -1473,7 +1253,5 @@ def propagate_auto(spark: SparkSession, docs_geo: DataFrame,
         bc = build_broadcast_pack(spark, points, cell_res, index_res,
                                   halo_m, id_col)
         return probe_docs(docs_geo, bc, centroid), "broadcast"
-    tris = build_triangles(spark, points, cell_res, halo_m)
-    out = propagate_at(docs_geo, tris, index_res, centroid,
-                       broadcast_triangles=False)
-    return out, "shuffle"
+    tris = build_triangles(spark, points, cell_res, halo_m, id_col)
+    return propagate_at(docs_geo, tris, index_res, centroid), "shuffle"

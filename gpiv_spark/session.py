@@ -23,10 +23,28 @@ from pyspark.sql import SparkSession
 _WORKERENV = str(Path(__file__).resolve().parent / "workerenv")
 
 
+def _default_driver_mem() -> str:
+    """min(16g, ~40% of the cgroup or physical memory limit). The heap
+    is pinned (-Xms), so it is committed up front; the rest is left to
+    the Python workers and the page cache the pack mmaps live in."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for f in ("/sys/fs/cgroup/memory.max",
+              "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            v = Path(f).read_text().strip()
+        except OSError:
+            continue
+        if v.isdigit():
+            limit = min(limit, int(v))
+    return f"{max(1, min(16, int(0.4 * limit) >> 30))}g"
+
+
 def get_spark(app: str = "gpiv_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     if shuffle_partitions is None:
         shuffle_partitions = 2 * cpus
     # preserve any caller-provided worker PYTHONPATH entries
@@ -60,12 +78,12 @@ def get_spark(app: str = "gpiv_spark", cpus: int | None = None,
         # bounded by maxRecordsPerBatch above.
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str((1 << 31) - 1))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         # Pinned heap + ParallelGC: G1's periodic uncommit (madvise ->
-        # TLB-shootdown IPIs) burned 5x more kernel than user CPU on this
+        # TLB-shootdown IPIs) burned 5x more kernel than user CPU on a
         # virtualized 32-core box and inverted thread scaling.
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')} -XX:+UseParallelGC")
+                f"-Xms{heap} -XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

@@ -124,9 +124,11 @@ def cmd_dem(args) -> None:
     """Replicates the reference's DEM/TPU raster production
     (run_test_v1.py:105-133: grid the point cloud's TIN, write
     GeoTIFFs via rasters.py:21-43) with the engine's distributed TIN:
-    points -> per-cell Delaunay pack -> shuffle-free mapInPandas probe
-    of every pixel center -> DEM (interpolated z) and TPU
-    (propagated sigma_z, E3) GeoTIFFs through sinks.write_raster."""
+    points -> certified per-cell Delaunay pack -> shuffle-free
+    mapInPandas probe of every pixel center -> DEM (interpolated z) and
+    TPU (propagated sigma_z, E3) GeoTIFFs through sinks.write_raster.
+    A cloud with points outside the model extent (functions/geocode.py)
+    fails with the certificate's ValueError."""
     import numpy as np
     from pyspark.sql import functions as F
 

@@ -45,15 +45,17 @@ def main() -> None:
     from gpiv_spark.functions import geocode
     from gpiv_spark.operators.tin import (
         PACK_BYTES_PER_POINT,
-        build_pack_blobs,
+        PackFileHandle,
         build_triangles,
+        certify_pack_blobs,
         merge_pack_blobs,
         probe_docs,
         propagate_at,
     )
     from gpiv_spark.plans import lineage
 
-    fp = (f"las={args.las}-v1" if args.las else f"points={args.points}-v1")
+    # v2: stages hold certified triangles (v1 checkpoints may not)
+    fp = (f"las={args.las}-v2" if args.las else f"points={args.points}-v2")
 
     def build_points():
         if args.las:
@@ -85,11 +87,12 @@ def main() -> None:
 
     # size-based physical-plan switch, shared with propagate_auto
     # (operators/tin.py): point count is known from the arguments, so
-    # the branch is decided before any job runs. Small TIN -> the
-    # DISTRIBUTED per-cell pack build (workers do Delaunay + pack their
-    # shard; the driver only concatenates — never a toArrow() of the
-    # triangle table). Large TIN -> the triangle table stays distributed
-    # and docs equi-join it on the fine cell.
+    # the branch is decided before any job runs. Both branches build the
+    # same certified pack (workers do Delaunay + certificate + pack
+    # their shard; the driver only concatenates). Small TIN -> workers
+    # mmap the pack and probe docs without a shuffle. Large TIN -> the
+    # pack's triangles become a distributed table that docs equi-join
+    # on the fine cell.
     if args.las:
         # estimate the point count from file metadata only (no scan):
         # format-0 record + 6 double extra dims = 68 bytes/point
@@ -107,12 +110,15 @@ def main() -> None:
 
     t0 = time.time()
     if use_broadcast:
-        # checkpoint the expensive stage (per-cell Delaunay + pack
+        # checkpoint the expensive stage (the certify ladder's per-cell
         # shards) as the tiny blob table — resumable like any stage
         blobs, resumed_t = lineage.resume_or_run(
             spark, args.checkpoint, "pack_blobs",
-            lambda: build_pack_blobs(spark, build_points(), cell_res=4,
-                                     index_res=9, halo_m=6.0, id_col="pid"),
+            lambda: spark.createDataFrame(
+                sorted(certify_pack_blobs(spark, build_points(), cell_res=4,
+                                          index_res=9, halo_m=6.0,
+                                          id_col="pid").items()),
+                "cell long, payload binary"),
             fp,
         )
     else:
@@ -152,12 +158,10 @@ def main() -> None:
     def build_propagated():
         if use_broadcast:
             # driver work = shard concatenation only (merge_pack_blobs);
-            # the blob table is ~64 rows, one per coarse cell
+            # the blob table is one row per populated coarse cell
             pack = merge_pack_blobs(blobs.toArrow(), index_res=9)
-            bc = spark.sparkContext.broadcast(pack)
-            return probe_docs(docs, bc, cen)
-        return propagate_at(docs, tris, index_res=9, centroid=cen,
-                            broadcast_triangles=False)
+            return probe_docs(docs, PackFileHandle(spark, pack), cen)
+        return propagate_at(docs, tris, index_res=9, centroid=cen)
 
     out, resumed_p = lineage.resume_or_run(
         spark, args.checkpoint, "propagated",

@@ -10,6 +10,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 def spark():
     from gpiv_spark.session import get_spark
 
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    # cpus from SPARK_GRAFT_CPUS, else the cores this process may use
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
     s.stop()

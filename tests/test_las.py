@@ -82,8 +82,8 @@ def test_las_path_matches_parquet_path_bit_for_bit(spark, tmp_path, cloud):
     cen = (X0 + 239.0, Y0 + 239.0, 7.0)
 
     def run(points):
-        tris = build_triangles(spark, points.drop("point_id"),
-                               cell_res=3, halo_m=8.0)
+        tris = build_triangles(spark, points, cell_res=3, halo_m=8.0,
+                               id_col="point_id")
         return (
             propagate_at(docs, tris, index_res=8, centroid=cen)
             .toPandas().sort_values("doc_id").reset_index(drop=True)

@@ -109,7 +109,7 @@ def test_propagate_probe_is_narrow(spark):
     px = geocode.xq_expr(d, "pid")
     py = geocode.yq_expr(d, "pid")
     points = pts.select(
-        F.expr(px).alias("x"), F.expr(py).alias("y"),
+        "pid", F.expr(px).alias("x"), F.expr(py).alias("y"),
         F.lit(1.0).alias("z"),
         F.lit(0.1).alias("var_x"), F.lit(0.1).alias("var_y"),
         F.lit(0.1).alias("var_z"),
@@ -124,7 +124,7 @@ def test_propagate_probe_is_narrow(spark):
     )
     q = propagate_at(docs, tris, index_res=7, centroid=(0.0, 0.0, 0.0))
     plan = _plan(q)
-    # the probe-side FlatMapGroupsInPandas feeds a projection of exactly
+    # the probe-side MapInPandas feeds a projection of exactly
     # the narrow columns; var_x_1 etc. appear only once (payload join side)
     probe_section = plan.split("min(tri_id")[0]
     assert "var_x_1" not in probe_section.split("Project")[-1]

@@ -26,17 +26,16 @@ def _mini_pack():
     import pandas as pd
 
     pdf = pd.DataFrame(pts)
-    from gpiv_spark.functions import delaunay as dl
-
-    tri = dl.delaunay(pdf[["x", "y"]].to_numpy(np.float64))
-    tris = pd.DataFrame({
-        "tri_id": np.arange(len(tri), dtype=np.int64),
-        "v1": pdf["pid"].to_numpy()[tri[:, 0]],
-        "v2": pdf["pid"].to_numpy()[tri[:, 1]],
-        "v3": pdf["pid"].to_numpy()[tri[:, 2]],
-    })
-    return tin.pack_triangle_index_normalized(
-        tris, pdf.rename(columns={"pid": "point_id"}), 8)
+    # the production pack path: every one of 4x4 cells sees the whole
+    # cloud, so its kernel certifies all its owned triangles, and
+    # merge_pack_blobs joins the 16 shards
+    n = 4
+    kern = tin._make_cell_blob_kernel(
+        n, geocode.EXTENT / n, 256, geocode.EXTENT / 256,
+        geocode.EXTENT, geocode.EXTENT, "pid")
+    rows = [kern((c,), pdf).iloc[0] for c in range(n * n)]
+    assert not any(r["n_uncert"] for r in rows)
+    return tin.merge_pack_blobs(rows, 8)
 
 
 def test_c_probe_matches_numpy_bitwise():

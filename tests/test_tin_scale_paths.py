@@ -1,5 +1,6 @@
-"""The two doc-scale TIN paths (shuffle equi+refine join, broadcast
-index probe) must agree with each other and interpolate planes exactly."""
+"""The two doc-scale TIN plans (shuffle equi+refine join over
+build_triangles, mapInPandas probe over the pack) read ONE certified
+pack: they must return identical rows and interpolate planes exactly."""
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -7,22 +8,18 @@ import pytest
 
 from gpiv_spark.dialect import SPARK as d
 from gpiv_spark.functions import geocode
-from gpiv_spark.operators.tin import (
-    build_triangles,
-    propagate_at,
-    propagate_at_broadcast,
-)
+from gpiv_spark.operators.tin import build_triangles, propagate_at
 
 X0, Y0 = geocode.X0, geocode.Y0
 CEN = (X0 + 239.0, Y0 + 239.0, 7.0)
 
 
-@pytest.fixture(scope="module")
-def tris(spark):
-    pts = spark.range(20_000).select(F.col("id").alias("pid"))
+def _point_df(spark, n):
+    pts = spark.range(n).select(F.col("id").alias("pid"))
     px = geocode.xq_expr(d, "pid")
     py = geocode.yq_expr(d, "pid")
-    points = pts.select(
+    return pts.select(
+        F.col("pid"),
         F.expr(px).alias("x"),
         F.expr(py).alias("y"),
         F.expr(f"0.01 * ({px} - {X0!r}) - 0.02 * ({py} - {Y0!r}) + 5.0").alias("z"),
@@ -33,7 +30,12 @@ def tris(spark):
         F.lit(0.0).alias("cov_xz"),
         F.lit(0.0).alias("cov_yz"),
     )
-    t = build_triangles(spark, points, cell_res=3, halo_m=8.0).cache()
+
+
+@pytest.fixture(scope="module")
+def tris(spark):
+    t = build_triangles(spark, _point_df(spark, 20_000), cell_res=3,
+                        halo_m=8.0).cache()
     t.count()
     yield t
     t.unpersist()
@@ -51,7 +53,6 @@ def docs(spark):
 def test_shuffle_path_plane_exact(spark, tris, docs):
     res = propagate_at(docs, tris, index_res=8, centroid=CEN).toPandas()
     assert len(res) > 4900  # nearly all docs inside the hull
-    expected = 0.01 * (res["zp"] * 0)  # placeholder shape
     dgeo = docs.toPandas().set_index("doc_id")
     exp = 0.01 * (dgeo.loc[res["doc_id"], "x"].to_numpy() - X0) - 0.02 * (
         dgeo.loc[res["doc_id"], "y"].to_numpy() - Y0
@@ -60,131 +61,12 @@ def test_shuffle_path_plane_exact(spark, tris, docs):
     assert (res["var_zp"] > 0).all()
 
 
-def test_broadcast_path_matches_shuffle_path(spark, tris, docs):
-    a = (
-        propagate_at(docs, tris, index_res=8, centroid=CEN)
-        .toPandas().set_index("doc_id").sort_index()
-    )
-    b = (
-        propagate_at_broadcast(spark, docs, tris, index_res=8, centroid=CEN)
-        .toPandas().set_index("doc_id").sort_index()
-    )
-    assert len(a) == len(b)
-    np.testing.assert_allclose(a["zp"], b["zp"], atol=1e-9)
-    # var depends on WHICH triangle is picked on shared edges; interior
-    # docs pick identically, tolerate a tiny disagreement fraction
-    close = np.isclose(a["var_zp"], b["var_zp"], rtol=1e-6)
-    assert close.mean() > 0.999
-
-
-def test_normalized_pack_matches_dense_pack(spark, tris, docs):
-    """The (points + vertex-index) pack must produce identical results
-    to the denormalized per-triangle pack."""
-    import pandas as pd
-    import pyspark.sql.functions as FF
-
-    from gpiv_spark.operators.tin import (
-        _probe_batch,
-        build_triangle_ids,
-        pack_triangle_index,
-        pack_triangle_index_normalized,
-    )
-
-    pts = spark.range(20_000).select(FF.col("id").alias("pid"))
-    px = geocode.xq_expr(d, "pid")
-    py = geocode.yq_expr(d, "pid")
-    points = pts.select(
-        FF.col("pid"),
-        FF.expr(px).alias("x"),
-        FF.expr(py).alias("y"),
-        FF.expr(f"0.01 * ({px} - {X0!r}) - 0.02 * ({py} - {Y0!r}) + 5.0").alias("z"),
-        FF.expr("(1 + pid % 7) * 0.0001").alias("var_x"),
-        FF.expr("(1 + pid % 5) * 0.0001").alias("var_y"),
-        FF.expr("(1 + pid % 3) * 0.0001").alias("var_z"),
-        FF.lit(0.0).alias("cov_xy"),
-        FF.lit(0.0).alias("cov_xz"),
-        FF.lit(0.0).alias("cov_yz"),
-    )
-    tri_ids = build_triangle_ids(spark, points, cell_res=3, halo_m=8.0,
-                                 id_col="pid")
-    pack_n = pack_triangle_index_normalized(
-        tri_ids.toPandas(), points.toPandas(), index_res=8, id_col="pid"
-    )
-    pack_d = pack_triangle_index(tris.toPandas(), index_res=8)
-
-    dpdf = docs.toPandas()
-    xv = dpdf["x"].to_numpy()
-    yv = dpdf["y"].to_numpy()
-    zp_n, var_n, f_n = _probe_batch(pack_n, xv, yv, CEN)
-    zp_d, var_d, f_d = _probe_batch(pack_d, xv, yv, CEN)
-    # both triangulations come from the same points (possibly different
-    # insertion partitioning at different cell_res), so compare on the
-    # plane-exact zp where both found
-    both = f_n & f_d
-    assert both.mean() > 0.97
-    np.testing.assert_allclose(zp_n[both], zp_d[both], atol=1e-7)
-    assert (var_n[both] > 0).all()
-
-
-def _point_df(spark, n):
-    import pyspark.sql.functions as FF
-
-    pts = spark.range(n).select(FF.col("id").alias("pid"))
-    px = geocode.xq_expr(d, "pid")
-    py = geocode.yq_expr(d, "pid")
-    return pts.select(
-        FF.col("pid"),
-        FF.expr(px).alias("x"),
-        FF.expr(py).alias("y"),
-        FF.expr(f"0.01 * ({px} - {X0!r}) - 0.02 * ({py} - {Y0!r}) + 5.0").alias("z"),
-        FF.expr("(1 + pid % 7) * 0.0001").alias("var_x"),
-        FF.expr("(1 + pid % 5) * 0.0001").alias("var_y"),
-        FF.expr("(1 + pid % 3) * 0.0001").alias("var_z"),
-        FF.lit(0.0).alias("cov_xy"),
-        FF.lit(0.0).alias("cov_xz"),
-        FF.lit(0.0).alias("cov_yz"),
-    )
-
-
-def test_blob_pack_identical_to_driver_pack(spark, docs):
-    """The distributed per-cell blob pack must reproduce the old
-    driver-side pack EXACTLY — same arrays, same probe output — so the
-    round-2 build-path change is a pure physical-plan swap."""
-    from gpiv_spark.operators.tin import (
-        _probe_batch,
-        build_pack_blobs,
-        build_triangle_ids,
-        merge_pack_blobs,
-        pack_triangle_index_normalized,
-    )
-
-    points = _point_df(spark, 20_000)
-    tri_ids = build_triangle_ids(spark, points, cell_res=3, halo_m=8.0,
-                                 id_col="pid")
-    pack_old = pack_triangle_index_normalized(
-        tri_ids.toPandas(), points.toPandas(), index_res=8, id_col="pid"
-    )
-    blobs = build_pack_blobs(spark, points, cell_res=3, index_res=8,
-                             halo_m=8.0, id_col="pid")
-    pack_new = merge_pack_blobs(blobs.toArrow(), index_res=8)
-
-    for key in ("px", "py", "pz", "offsets", "cell_tri", "tv",
-                "x1", "y1", "x2", "y2", "x3", "y3"):
-        np.testing.assert_array_equal(pack_old[key], pack_new[key], err_msg=key)
-
-    dpdf = docs.toPandas()
-    xv, yv = dpdf["x"].to_numpy(), dpdf["y"].to_numpy()
-    zo, vo, fo = _probe_batch(pack_old, xv, yv, CEN)
-    zn, vn, fn = _probe_batch(pack_new, xv, yv, CEN)
-    np.testing.assert_array_equal(fo, fn)
-    np.testing.assert_array_equal(zo, zn)
-    np.testing.assert_array_equal(vo, vn)
-
-
 def test_run_pipeline_entry_switch(spark, monkeypatch, tmp_path, capsys):
-    """The spark-submit entry ships the size-switched physical plan:
-    broadcast branch = distributed pack blobs (checkpointed, no triangle
-    toArrow), shuffle branch = distributed equi-join; both resumable."""
+    """The spark-submit entry ships the size-switched physical plan over
+    one certified pack: broadcast branch = the certify ladder's blob
+    rows (checkpointed) merged into an mmap'd pack, shuffle branch =
+    the pack's triangles equi-joined; both resumable, and both return
+    the same rows bit for bit."""
     import json
     import sys as _sys
 
@@ -212,11 +94,18 @@ def test_run_pipeline_entry_switch(spark, monkeypatch, tmp_path, capsys):
     assert r2["n_docs_out"] == r1["n_docs_out"]
     assert r2["mean_var"] == r1["mean_var"]
 
+    def propagated():
+        return (spark.read.parquet(str(tmp_path / "ckpt" / "propagated" / "data"))
+                .toPandas().sort_values("doc_id").reset_index(drop=True))
+
+    bcast = propagated()
     r3 = run(base + ["--broadcast-budget-mb", "0"])  # forced shuffle path
     assert r3["mode"] == "shuffle"
     assert r3["resumed"] == {"triangles": False, "propagated": False}
-    assert r3["n_docs_out"] == r1["n_docs_out"]
-    np.testing.assert_allclose(r3["mean_var"], r1["mean_var"], rtol=1e-6)
+    shuf = propagated()
+    np.testing.assert_array_equal(shuf["doc_id"], bcast["doc_id"])
+    np.testing.assert_array_equal(shuf["zp"], bcast["zp"])
+    np.testing.assert_array_equal(shuf["var_zp"], bcast["var_zp"])
 
     # LAS-sourced points through the same entry (S1 on the real format)
     from gpiv_spark import fixtures
@@ -246,7 +135,8 @@ def test_run_pipeline_entry_switch(spark, monkeypatch, tmp_path, capsys):
 
 def test_propagate_auto_switches_paths(spark, docs):
     """Budget above/below the estimated pack size selects broadcast vs
-    shuffle, and both agree on the interpolated plane."""
+    shuffle; both read the same certified pack, so they return the same
+    docs with exactly equal zp and var_zp."""
     from gpiv_spark.operators.tin import propagate_auto
 
     points = _point_df(spark, 20_000)
@@ -259,5 +149,63 @@ def test_propagate_auto_switches_paths(spark, docs):
     assert mode_b == "shuffle"
     pa = a.toPandas().set_index("doc_id").sort_index()
     pb = b.toPandas().set_index("doc_id").sort_index()
-    assert len(pa) == len(pb) and len(pa) > 4900
-    np.testing.assert_allclose(pa["zp"], pb["zp"], atol=1e-9)
+    assert len(pa) > 4900
+    np.testing.assert_array_equal(pa.index, pb.index)
+    np.testing.assert_array_equal(pa["zp"], pb["zp"])
+    np.testing.assert_array_equal(pa["var_zp"], pb["var_zp"])
+
+
+_EVICT_SCRIPT = """
+import json, os
+import pandas as pd
+from pyspark.sql import functions as F
+from gpiv_spark.functions import geocode
+from gpiv_spark.operators import tin
+from gpiv_spark.session import get_spark
+from tests.test_tin_scale_paths import CEN, _point_df
+
+spark = get_spark("evict", cpus=1, shuffle_partitions=1)
+points = _point_df(spark, 2000)
+docs = spark.range(0, 500, 1, 1).select(
+    F.col("id").alias("doc_id"),
+    (F.lit(geocode.X0) + F.col("id") * 0.9).alias("x"),
+    (F.lit(geocode.Y0) + F.col("id") * 0.9).alias("y"))
+
+def cache_size(batches):
+    for _ in batches:
+        pass
+    yield pd.DataFrame({"pid": [os.getpid()], "n": [len(tin._PACK_CACHE)]})
+
+seen = []
+for _ in range(5):
+    h = tin.build_broadcast_pack(spark, points, cell_res=3, index_res=8,
+                                 halo_m=8.0, id_col="pid")
+    assert tin.probe_docs(docs, h, CEN).count() > 0
+    row = spark.range(0, 1, 1, 1).mapInPandas(
+        cache_size, "pid long, n long").collect()[0]
+    seen.append([row["pid"], row["n"]])
+    h.destroy()
+spark.stop()
+print(json.dumps(seen))
+"""
+
+
+def test_pack_cache_evicts_destroyed_packs(tmp_path):
+    """A reused worker (local[1]) that probed five build/destroy rounds
+    holds the views of ONE pack: entries whose directory is gone are
+    dropped before the next pack is opened."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(tmp_path))
+    out = subprocess.run([sys.executable, "-c", _EVICT_SCRIPT], cwd=root,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    seen = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len({pid for pid, _ in seen}) == 1, f"worker not reused: {seen}"
+    assert max(n for _, n in seen) == 1, f"worker pack cache grew: {seen}"

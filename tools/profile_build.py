@@ -8,7 +8,7 @@ Phases, each timed separately at a pinned core count:
                kernel + pack shard construction + driver collect)
 - merge      : merge_pack_blobs on the collected shards (serial driver)
 - broadcast  : sc.broadcast(pack) (serial driver pickle + disk)
-- certified  : the bench's actual build_tin_pack (certify=True e2e)
+- certified  : the bench's actual build_tin_pack (certified e2e)
 
 Usage: python tools/profile_build.py CPUS [N_POINTS [REPS]]
 Prints one JSON line.

@@ -1,7 +1,8 @@
 """Phase-level profiler for the headline pipeline (round-2 build path).
 
-Breaks the TIN index build into: plan / distributed-blob job+collect /
-driver merge / broadcast; then times repeated doc streams. Run at two
+Breaks the TIN index build into: certify ladder (distributed blob jobs
++ collect) / driver merge / pack write; then times repeated doc
+streams. Run at two
 pinned parallelism levels to locate any serial remainder.
 
 Usage: python tools/profile_headline.py [cpus ...]
@@ -19,25 +20,26 @@ import bench  # noqa: E402
 
 
 def profile_build(spark, n_points):
-    from gpiv_spark.operators.tin import build_pack_blobs, merge_pack_blobs
+    from gpiv_spark.operators.tin import (
+        PackFileHandle,
+        certify_pack_blobs,
+        merge_pack_blobs,
+    )
 
     points = bench.bench_points(spark, n_points)
     t0 = time.time()
-    blobs = build_pack_blobs(spark, points, cell_res=4, index_res=9,
-                             halo_m=6.0, id_col="pid")
-    t_plan = time.time() - t0
-    t0 = time.time()
-    tbl = blobs.toArrow()
+    blobs = certify_pack_blobs(spark, points, cell_res=4, index_res=9,
+                               halo_m=6.0, id_col="pid")
     t_job = time.time() - t0
     t0 = time.time()
-    pack = merge_pack_blobs(tbl, 9)
+    pack = merge_pack_blobs([{"payload": b} for b in blobs.values()], 9)
     t_merge = time.time() - t0
     t0 = time.time()
-    bc = spark.sparkContext.broadcast(pack)
-    t_bc = time.time() - t0
+    bc = PackFileHandle(spark, pack)
+    t_write = time.time() - t0
     nbytes = sum(v.nbytes for v in pack.values() if hasattr(v, "nbytes"))
-    print(f"  build: plan={t_plan:.2f} blob_job+collect={t_job:.2f} "
-          f"merge={t_merge:.2f} broadcast={t_bc:.2f} "
+    print(f"  build: certify_ladder={t_job:.2f} merge={t_merge:.2f} "
+          f"pack_write={t_write:.2f} "
           f"pack_mb={nbytes / 1e6:.1f} ntri={len(pack['tv'])}")
     return bc
 
